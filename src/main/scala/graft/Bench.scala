@@ -42,11 +42,13 @@ import org.apache.spark.sql.SparkSession
   * sandbox's vCPUs are time-shared and a noisy-neighbor window can
   * straddle several alphabetically-adjacent queries). The bench now
   * runs the adjudication protocol itself: after the battery, any
-  * query whose median exceeds 2x its own min-across-runs OR 2x its
-  * calib-scaled BASELINE.md FROZEN-r10 value (and is >= 0.25 s — sub-
-  * quarter-second rows trip 2x from pure timer noise) is re-measured
-  * in a quiet tail pass (SPARK_GRAFT_REMEASURE_RUNS, default 5, fresh
-  * warmup). The contended battery median is preserved in "contended",
+  * query whose median exceeds 1.5x its own min-across-runs OR 1.5x
+  * its calib-scaled BASELINE.md FROZEN-r10 value, or whose stddev
+  * exceeds 0.12 of its median (and is >= 0.25 s — sub-quarter-second
+  * rows trip the ratios from pure timer noise) is re-measured, worst
+  * first and at most 20 rows, in a quiet tail pass
+  * (SPARK_GRAFT_REMEASURE_RUNS, default 5, fresh warmup). The
+  * contended battery median is preserved in "contended",
   * the quiet median lands in "remeasured" — and replaces the query's
   * row in "queries" ONLY when the tail's own fresh calibration
   * ("remeasure_calib_spark32_sec") is <= the battery's, i.e. the tail
@@ -63,10 +65,9 @@ object Bench {
     val startNano = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - startNano) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     val budget = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1080").toDouble
-    val warmupOn = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "1"
     // run-but-not-in-headline-total (kept for round-over-round compat)
     val skipped = Seq("t36_jaccard_pairs")
     // not run at all unless explicitly re-enabled
@@ -84,21 +85,12 @@ object Bench {
     // added (a contended window inflates run-to-run spread long before
     // it doubles the median), and the cap raised 15 -> 20 to absorb the
     // wider net (worst-first under the budget guard, as before).
-    val remeasureCap = sys.env.getOrElse("SPARK_GRAFT_REMEASURE_MAX", "20").toInt
-    val remeasureTrigger = sys.env.getOrElse("SPARK_GRAFT_REMEASURE_TRIGGER", "1.5").toDouble
-    val remeasureSdTrigger = sys.env.getOrElse("SPARK_GRAFT_REMEASURE_SD_TRIGGER", "0.12").toDouble
+    val remeasureCap = 20
+    val remeasureTrigger = 1.5
+    val remeasureSdTrigger = 0.12
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_FILE",
       if (only.nonEmpty) "BENCH_SUBSET.json" else "BENCH_LOCAL.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // native TIME type (Flink TIME(p) analog) — see sql/Ddl.scala
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
       .filterNot { case (n, _) => excluded.contains(n) }
@@ -127,7 +119,7 @@ object Bench {
     // bench — fall back to -1 on any failure.
     val calibSpark = try medianOf((1 to 3).map { _ =>
       val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
+      spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("bit_xor(xxhash64(id)) AS s").collect()
       (System.nanoTime() - t0) / 1e9
     }) catch { case e: Throwable =>
@@ -216,7 +208,7 @@ object Bench {
         // Degrade near the budget: 1 run, no warmup, so every remaining
         // query still gets a (noisier) row instead of none.
         val degraded = elapsed > budget * 0.75
-        if (warmupOn && !degraded) runOnce(name, fn)
+        if (!degraded) runOnce(name, fn)
         val nRuns = if (degraded) 1 else runs
         val ts = (1 to nRuns).flatMap(_ => runOnce(name, fn)).sorted
         if (ts.isEmpty) failed += name
@@ -237,9 +229,8 @@ object Bench {
     val notRun = if (stoppedAt >= 0) sorted.drop(stoppedAt).map(_._1) else Seq.empty
 
     // ---- self-adjudication pass (round-14 directive #1) ----
-    // Trigger: median >= 0.25 s AND (median > 2x own min-run OR median >
-    // 2x calib-scaled frozen value). The frozen threshold scales by
-    // calibSpark/anchorCalib so a uniformly slow host doesn't flag the
+    // Trigger: see BenchAdjudication.isSuspect. The frozen threshold
+    // scales by calibSpark/anchorCalib so a uniformly slow host doesn't flag the
     // whole battery; the min-run threshold is calib-free (same-process
     // comparison). Suspects re-measure worst-first under a cap, with the
     // artifact rewritten after each so a kill still leaves adjudicated
@@ -248,10 +239,8 @@ object Bench {
     val calibScale = if (calibSpark > 0) calibSpark / anchorCalib else 1.0
     var extra = ""
     // Subset runs ARE the quiet protocol already, so adjudication is off
-    // for them unless forced (the force flag exists to smoke-test this
-    // path without a full battery).
-    val forceAdj = sys.env.getOrElse("SPARK_GRAFT_REMEASURE_FORCE", "0") == "1"
-    if (remeasureOn && stoppedAt < 0 && (only.isEmpty || forceAdj)) {
+    // for them.
+    if (remeasureOn && stoppedAt < 0 && only.isEmpty) {
       def severity(r: (String, Double, Double, Int, Int, Double)): Double = {
         val (name, med, sd, _, _, mn) = r
         BenchAdjudication.severity(med, sd, mn,
@@ -270,7 +259,7 @@ object Bench {
         // re-measure really ran quieter than the battery.
         def tailCalib(): Double = try medianOf((1 to 3).map { _ =>
           val t0 = System.nanoTime()
-          spark.range(0L, 200000000L, 1L, cpus.toInt)
+          spark.range(0L, 200000000L, 1L, cpus)
             .selectExpr("bit_xor(xxhash64(id)) AS s").collect()
           (System.nanoTime() - t0) / 1e9
         }) catch { case _: Throwable => -1.0 }

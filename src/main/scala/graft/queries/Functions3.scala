@@ -95,7 +95,7 @@ object Functions3 {
     // (RowDataToCsvConverters / RowDataToJsonConverters TIME branches)
     // and as Avro time-millis/micros logical types
     // (AvroSchemaConverter). Spark's CSV/JSON datasources reject
-    // TimeType outright (probed in tools/TimeProbe), so the text
+    // TimeType outright (BASELINE.md, TIME probe record), so the text
     // formats go through sources.TimeFormats (same text-on-the-wire
     // contract); Avro gained the logical-type legs natively in
     // sources.Avro. The oracle derives the same TIME values from the
@@ -136,7 +136,7 @@ object Functions3 {
     // ---- TIME(p) through ORC (r16 directive #3) -------------------------
     // The reference's ORC bridge writes TIME as an int column of
     // millis-of-day (flink-orc RowDataVectorizer.java:120); Spark's ORC
-    // datasource rejects TimeType (tools/TimeProbe), so TimeFormats
+    // datasource rejects TimeType (BASELINE.md, TIME probe record), so TimeFormats
     // applies the same numeric wire around it — INT millis for p<=3
     // (reference-compatible bytes), BIGINT micros for p>3 (the Avro
     // time-micros extension). Encode/decode are codegen'd cast chains;

@@ -76,14 +76,14 @@ object Staging {
   // checkpoint in this codebase was therefore a no-op, and a bench /
   // verify session retained one checkpoint per invocation for the JVM
   // lifetime (reclaimed only when the ContextCleaner happened to GC the
-  // dropped reference). The helpers below capture the persisted RDD the
-  // checkpoint actually added — by diffing getPersistentRDDs around the
-  // eager checkpoint, under a lock so the diff cannot swallow a
-  // concurrent persist — and release THAT.
+  // dropped reference). The helpers below take the persisted RDD
+  // straight from the checkpointed plan's LogicalRDD — the RDD
+  // `localCheckpoint` persisted — and release THAT. Nothing else is
+  // captured, so a concurrent `persist` on another thread is never
+  // mistaken for checkpoint blocks.
 
-  private val cpLock = new Object
   private val lastCheckpoint =
-    scala.collection.mutable.Map.empty[String, Seq[org.apache.spark.rdd.RDD[_]]]
+    scala.collection.concurrent.TrieMap.empty[String, Seq[org.apache.spark.rdd.RDD[_]]]
 
   /** Eagerly localCheckpoint `df`, returning the checkpointed frame and
     * handles to the persisted RDDs the checkpoint pinned. Releasing the
@@ -91,16 +91,12 @@ object Staging {
     * no longer executable (lineage was cut), so release only after its
     * consumers have finished. */
   def checkpointWithHandles(df: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) =
-    cpLock.synchronized {
-      val sc = df.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val cp = df.localCheckpoint()
-      val added = sc.getPersistentRDDs.collect {
-        case (id, r) if !before(id) => r
-      }.toSeq
-      (cp, added)
-    }
+      : (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
+    val cp = df.localCheckpoint()
+    (cp, cp.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    })
+  }
 
   /** Free checkpoint blocks obtained from [[checkpointWithHandles]].
     * Never throws — a release race with session shutdown must not fail
@@ -130,7 +126,7 @@ object Staging {
     * not until the next statement. */
   def supersedeHandles(key: String,
                        handles: Seq[org.apache.spark.rdd.RDD[_]]): Unit = {
-    val old = cpLock.synchronized { lastCheckpoint.put(key, handles) }
+    val old = lastCheckpoint.put(key, handles)
     old.foreach(releaseCheckpoint)
   }
 }

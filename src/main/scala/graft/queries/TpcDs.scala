@@ -75,48 +75,6 @@ object TpcDs {
        |         quarter(o_orderdate) AS d_qtr
        |  FROM lineitem l JOIN orders o ON l_orderkey = o_orderkey)""".stripMargin
 
-  /** d02 in both plan shapes — results are identical because the
-    * three remainder classes partition lineitem. `singleScan = false`
-    * is TPC-DS q5's literal shape (three per-channel scans union'd —
-    * in real TPC-DS the channels are three DIFFERENT fact tables, so
-    * the triple scan is inherent); `singleScan = true` derives the
-    * channel as a column and reads the fact ONCE — the shape to
-    * prefer when channels live in one table, as in this fixture.
-    * D02Probe measures the two at sf1; BASELINE.md records the
-    * adjudication.
-    */
-  private[graft] def d02Shape(s: SparkSession, dir: String,
-                              singleScan: Boolean): DataFrame = {
-    val p = t(s, dir, "part")
-    val tagged =
-      if (singleScan)
-        t(s, dir, "lineitem").withColumn("channel", channel)
-          .join(p, col("l_partkey") === col("p_partkey"))
-          .select(col("channel"), col("p_brand"),
-            dec6(net).as("sales_dec"),
-            when(col("l_returnflag") === "R", dec6(net))
-              .otherwise(lit(0).cast(DecimalType(22, 6))).as("returns_dec"))
-      else {
-        def chan(rem: Int, name: String) =
-          t(s, dir, "lineitem").filter(col("l_linenumber") % 3 === rem)
-            .join(p, col("l_partkey") === col("p_partkey"))
-            .select(lit(name).as("channel"), col("p_brand"),
-              dec6(net).as("sales_dec"),
-              when(col("l_returnflag") === "R", dec6(net))
-                .otherwise(lit(0).cast(DecimalType(22, 6))).as("returns_dec"))
-        chan(1, "store").unionAll(chan(2, "catalog")).unionAll(chan(0, "web"))
-      }
-    tagged
-      // two-phase rollup (see d05): grain-aggregate the fact once,
-      // Expand multiplies only the |channel x brand| frame
-      .groupBy(col("channel"), col("p_brand"))
-      .agg(sum(col("sales_dec")).as("g_sales"), sum(col("returns_dec")).as("g_returns"))
-      .rollup(col("channel"), col("p_brand"))
-      .agg(sum(col("g_sales")).cast("double").as("sales"),
-           sum(col("g_returns")).cast("double").as("returns"),
-           (sum(col("g_sales")) - sum(col("g_returns"))).cast("double").as("profit"))
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- d01: star join + year/brand agg (TPC-DS q3 shape) -----------
@@ -142,7 +100,31 @@ object TpcDs {
     // ---- d02: multi-channel union + ROLLUP (TPC-DS q5 shape) ---------
     // Three disjoint channel scans union'd, then ROLLUP(channel, brand)
     // with sales / returns / profit — the q5 per-channel P&L roll-up.
-    "d02_channel_rollup" -> ((s, dir) => d02Shape(s, dir, singleScan = false)),
+    // In real TPC-DS the channels are three different fact tables, so
+    // the triple scan is inherent. The remainder classes partition
+    // lineitem, so one scan with a derived channel column gives the same
+    // rows, but measured ~27% slower at sf1 (BASELINE.md §"d02 shape
+    // adjudication"): the three filtered scans run as independent stages
+    // and each feeds a constant channel literal.
+    "d02_channel_rollup" -> ((s, dir) => {
+      val p = t(s, dir, "part")
+      def chan(rem: Int, name: String) =
+        t(s, dir, "lineitem").filter(col("l_linenumber") % 3 === rem)
+          .join(p, col("l_partkey") === col("p_partkey"))
+          .select(lit(name).as("channel"), col("p_brand"),
+            dec6(net).as("sales_dec"),
+            when(col("l_returnflag") === "R", dec6(net))
+              .otherwise(lit(0).cast(DecimalType(22, 6))).as("returns_dec"))
+      chan(1, "store").unionAll(chan(2, "catalog")).unionAll(chan(0, "web"))
+        // two-phase rollup (see d05): grain-aggregate the fact once,
+        // Expand multiplies only the |channel x brand| frame
+        .groupBy(col("channel"), col("p_brand"))
+        .agg(sum(col("sales_dec")).as("g_sales"), sum(col("returns_dec")).as("g_returns"))
+        .rollup(col("channel"), col("p_brand"))
+        .agg(sum(col("g_sales")).cast("double").as("sales"),
+             sum(col("g_returns")).cast("double").as("returns"),
+             (sum(col("g_sales")) - sum(col("g_returns"))).cast("double").as("profit"))
+    }),
 
     // ---- d03: star with multi-dim filters + avgs (TPC-DS q7 shape) ---
     "d03_star_averages" -> ((s, dir) => {

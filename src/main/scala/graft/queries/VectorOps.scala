@@ -147,8 +147,9 @@ object VectorOps {
     // graft.ops.Pq: 64-dim floats (256 B) → 16 sub-codes of ≤1 B
     // (16× memory cut — the FAISS-standard M=16 shape). Parameters
     // chosen by measured recall@3 vs exact L2 on the fixtures
-    // (RecallProbe: m=8/k=16 → 0.17, m=16/k=64 → 0.53, m=32/k=64 →
-    // 0.87 — isotropic random data is PQ's worst case; clustered real
+    // (BASELINE.md §"ANN recall at scale": m=8/k=16 → 0.17,
+    // m=16/k=64 → 0.53, m=32/k=64 → 0.87 — isotropic random data is
+    // PQ's worst case; clustered real
     // embeddings do far better). Codes and codebooks are materialized;
     // the oracle recomputes every ADC distance from them with the same
     // nested left-to-right fold, so encoding AND scoring are
@@ -226,7 +227,8 @@ object VectorOps {
     // shortlist from the compressed codes, then exact L2 over the raw
     // embeddings re-ranks ONLY the shortlist (query-scale rows). This
     // is the recall lever for isotropic data — refined recall@k equals
-    // ADC recall@(k·refine) (RecallProbe sf1: 0.453 plain → 1.000
+    // ADC recall@(k·refine) (BASELINE.md §"ANN recall: refined search
+    // closes the gap", sf1: 0.453 plain → 1.000
     // refined) — while the corpus-scale scan still touches codes only.
     // Codes + codebooks are staged independently of v45 (Verify's
     // query order is not a contract), and the oracle replays shortlist

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Times the CEP worst-case shape — one key, an n-row consecutive
   * `A+` run whose NEXT step never matches, everything inside one
   * within-window — across a decade of n, to document that the r20
@@ -14,11 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object CepRunProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(4)
     import spark.implicits._
     import graft.streaming.Cep
     def is(k: String) = (r: org.apache.spark.sql.Row) =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measured before/after for the r18 bounded-parallel leaf compaction
   * (r17 directive #3): builds a Hive-partitioned table with N leaves ×
   * F tiny files, then times `Compact.compactPartitioned` at
@@ -15,11 +13,7 @@ object CompactProbe {
   def main(args: Array[String]): Unit = {
     val leaves = args.lift(0).map(_.toInt).getOrElse(200)
     val files = args.lift(1).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "32")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(32)
     val base = java.nio.file.Files.createTempDirectory("graft_compact_probe").toString
 
     def build(path: String): Unit =

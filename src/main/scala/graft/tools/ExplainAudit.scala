@@ -1,22 +1,29 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-/** Prints formatted physical plans for the headline queries so plan
-  * regressions (lost pushdown, surprise shuffles, missed broadcasts)
-  * are visible. Run: sbt "runMain graft.tools.ExplainAudit [queries...]"
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Prints the final adaptive physical plan of the headline queries so
+  * plan regressions (lost pushdown, surprise shuffles, missed
+  * broadcasts) are visible: each query is written once to the noop sink
+  * and the plan AQE settled on for that write is printed.
+  * Run: sbt "runMain graft.tools.ExplainAudit [queries...]"
+  * (SPARK_GRAFT_SF_DIR picks the data, default sf0.001).
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
+    // The write plans its own copy of the query, so its final plan is
+    // read from the listener that reports the finished write.
+    val writes = new LinkedBlockingQueue[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.isInstanceOf[V2WriteCommand]) writes.put(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q1_pricing_summary", "q2_local_revenue", "q3_shipping_priority",
@@ -32,7 +39,7 @@ object ExplainAudit {
         "v50_pq_refine", "v51_ivfpq_refine", "v52_filtered_ann",
         "q87_dynamic_session_gap",
         // rounds 13-14: SQL-text dynamic session, staged v45/v46, IVF-SQ
-        "q88_dynamic_session_sql", "v45_pq_ann", "v46_ivfpq_ann",
+        "q88_dynamic_session_sql", "v46_ivfpq_ann",
         "v54_ivfsq_refine",
         // late r14: TIMESTAMP→TIME cast through the Flink dialect
         "q90_time_cast", "q91_time_wrap_sql",
@@ -56,8 +63,11 @@ object ExplainAudit {
         "q9_rollup", "q34_cube", "d08_mom_revenue_ratio",
         "d12_qoq_channel_growth", "d20_month_pivot")
     names.foreach { n =>
+      val df = graft.SparkEntry.queries(n)(spark, dir)
+      df.write.format("noop").mode("overwrite").save()
       println(s"\n========== $n ==========")
-      graft.SparkEntry.queries(n)(spark, dir).explain("formatted")
+      println(Option(writes.poll(60, TimeUnit.SECONDS)).fold("(no plan reported)")(
+        _.executedPlan.toString))
     }
     spark.stop()
   }

@@ -36,25 +36,11 @@ object RecoveryProbe {
   def main(args: Array[String]): Unit = {
     val keyCounts = sys.env.getOrElse("SPARK_GRAFT_RECOVERY_KEYS",
       "10000,100000,1000000,4000000").split(",").map(_.trim.toInt).toSeq
-    val providers = Seq(
-      "default" -> None,
-      "rocksdb" -> Some(
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-    val results = providers.map { case (label, providerClass) =>
+    val results = Seq("default", "rocksdb").map { label =>
       val byKeys = keyCounts.map { n =>
-        val b0 = SparkSession.builder()
-          .master("local[8]")
-          .config("spark.sql.shuffle.partitions", 8)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-        val spark = providerClass.fold(b0)(p =>
-          b0.config("spark.sql.streaming.stateStore.providerClass", p)).getOrCreate()
-        spark.sparkContext.setLogLevel("ERROR")
+        val spark = graft.Session.local(8, 8, label)
         try n -> measure(spark, n)
-        finally {
-          spark.stop()
-          SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-        }
+        finally graft.Session.stop(spark)
       }
       byKeys.foreach { case (n, s) =>
         println(f"[recovery-probe] provider=$label%-8s keys=$n%,10d restore=$s%.2f s")

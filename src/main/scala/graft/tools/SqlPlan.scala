@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dialect EXPLAIN from the command line: runs each `;`-separated
   * statement of args(0) through a fresh [[graft.sql.SqlEnv]] (testdata
   * registered from args(1), default sf0.001) and prints every result —
@@ -18,14 +16,7 @@ object SqlPlan {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SqlPlan \"<stmt>[; <stmt>...]\" [sfDir]")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
     val env = graft.sql.SqlEnv(spark).registerTestdata(sfDir)
     graft.sql.Ddl.splitTopLevelSemi(args(0)).foreach { stmt =>
       println(s"\n===== $stmt =====")

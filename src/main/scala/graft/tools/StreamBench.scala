@@ -83,28 +83,17 @@ object StreamBench {
     // the reference's RocksDBStateBackend analog; with the partitions
     // axis showing every op state-store-commit-bound on one box, the
     // provider is the other lever worth measuring.
-    val storeProvider = sys.env.get("SPARK_GRAFT_STREAM_STORE").collect {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    }
+    val store = sys.env.getOrElse("SPARK_GRAFT_STREAM_STORE", "default")
     val runJsons = rowSizes.map { rows =>
       val byLevel = scala.collection.mutable.LinkedHashMap.empty[Int, collection.Map[String, Double]]
       levels.foreach { cpus =>
-        val b0 = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-        val spark = storeProvider.fold(b0)(p =>
-          b0.config("spark.sql.streaming.stateStore.providerClass", p)).getOrCreate()
-        spark.sparkContext.setLogLevel("ERROR")
+        val spark = graft.Session.local(cpus, cpus, store)
         val headline = rows == rowSizes.head && cpus == levels.head
         val passes = if (headline) opRuns else 1
         println(s"[stream-bench] --- rows=$rows parallelism=$cpus (passes=$passes) ---")
         byLevel(cpus) = medianMap((1 to passes).map(_ => benchAll(spark, rows, batches)))
-        spark.stop()
         // a fresh session (not getOrCreate reuse) per level
-        SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+        graft.Session.stop(spark)
       }
       val first = byLevel(levels.head)
       val last = byLevel(levels.last)
@@ -135,18 +124,10 @@ object StreamBench {
         // Same state-store provider as the levels axis: without this, a
         // SPARK_GRAFT_STREAM_STORE=rocksdb run would write DEFAULT-provider
         // partitions-axis rows into the rocksdb-labeled artifact (r12 advice).
-        val b0 = SparkSession.builder()
-          .master(s"local[$partsCpus]")
-          .config("spark.sql.shuffle.partitions", p)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-        val spark = storeProvider.fold(b0)(pr =>
-          b0.config("spark.sql.streaming.stateStore.providerClass", pr)).getOrCreate()
-        spark.sparkContext.setLogLevel("ERROR")
+        val spark = graft.Session.local(partsCpus, p, store)
         println(s"[stream-bench] --- partitions-axis rows=${rowSizes.head} cpus=$partsCpus partitions=$p ---")
         byParts(p) = benchAll(spark, rowSizes.head, batches)
-        spark.stop()
-        SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+        graft.Session.stop(spark)
       }
       s""","partitions_axis":{"cpus":$partsCpus,"rows":${rowSizes.head},""" +
         s""""levels":{${byParts.map { case (p, r) => s""""$p":${m(r)}""" }.mkString(",")}}}"""
@@ -161,7 +142,7 @@ object StreamBench {
     // maps stay name→number for round-over-round diffing.
     val json =
       s"""{"metric":"stream_rows_per_sec",""" +
-      s""""store_provider":"${storeProvider.getOrElse("default")}",""" +
+      s""""store_provider":"$store",""" +
       s""""op_runs":$opRuns,""" +
       s""""completion":{"_default":"process_all_available","proctime_window_agg":"offset",""" +
       s""""proctime_over_range":"offset","proctime_over_rows":"offset"},""" +
@@ -298,7 +279,7 @@ object StreamBench {
     locally {
       val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        graft.Session.stateStores("rocksdb"))
       try results += run("latefire_window_agg_timers", OutputMode.Append,
         df => StatefulOps.lateFireWindowAggTimers(
           df, Seq("tpe"), "ts", "value",

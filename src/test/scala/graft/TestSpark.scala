@@ -4,20 +4,6 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (JVM-wide). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      // native TIME type (Flink TIME(p) analog) — see sql/Ddl.scala
-      .config("spark.sql.timeType.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(8)
   val sfDir = "/root/testdata/sf0.001"
 }
